@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,49 +17,23 @@ object Bench {
     // for local iteration (empty/unset = all queries, the driver's config).
     val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Contention-immune companion metric: cumulative executor task time
-    // (taskMetrics.executorRunTime, ms) attributed per query by
-    // snapshotting the counter around each sequential run. Wall-clock on a
-    // shared VM conflates co-tenant noise with plan regressions (the r7
-    // artifact's warm>cold inversions); task time only counts cycles THIS
-    // query's tasks spent running, so a regression in the artifact is
-    // adjudicable without a quiet-VM re-run. The listener bus posts
-    // asynchronously — each window closes with a listener-bus drain via
-    // the graftshim bridge, not a sleep-poll.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    // Shuffle write volume per query (records + bytes), same snapshot
-    // protocol as task time: the exchange-size signal that adjudicates
-    // plan-shape claims (e.g. x271 vs x272 — bounded-heap prune vs
-    // shuffle-everything window) in the artifact itself.
-    val shufRec = new java.util.concurrent.atomic.AtomicLong(0)
-    val shufBytesAcc = new java.util.concurrent.atomic.AtomicLong(0)
-    // Longest single task in the current window — the STRAGGLER signal a
-    // task-total cannot show (a one-key serialization leaves totals near
-    // the balanced plan's while one task IS the stage wall). Reset per
-    // query by the snapshot protocol below.
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) {
-          taskMs.addAndGet(t.taskMetrics.executorRunTime)
-          shufRec.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
-          shufBytesAcc.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          maxTaskMs.accumulateAndGet(t.taskMetrics.executorRunTime, Math.max(_, _))
-        }
-    })
+    // Per-query windows of the shared recorder (graft.Metrics), each closed
+    // by a listener-bus drain:
+    //  - executor task time (executorRunTime, ms): the contention-immune
+    //    companion to wall-clock, which on a shared VM conflates co-tenant
+    //    noise with plan regressions (the r7 artifact's warm>cold
+    //    inversions) — task time only counts cycles THIS query's tasks ran,
+    //    so a regression is adjudicable without a quiet-VM re-run;
+    //  - shuffle write rows + bytes: the exchange-size signal that
+    //    adjudicates plan-shape claims (e.g. x271 vs x272 — bounded-heap
+    //    prune vs shuffle-everything window) in the artifact itself;
+    //  - the longest single task: the STRAGGLER signal a task total cannot
+    //    show (a one-key serialization leaves totals near the balanced
+    //    plan's while one task IS the stage wall).
     val taskTimes = scala.collection.mutable.LinkedHashMap[String, Long]()
     val shufRecs = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val shufBytes = scala.collection.mutable.LinkedHashMap[String, Long]()
     val maxTasks = scala.collection.mutable.LinkedHashMap[String, Long]()
     // A failed query records the sentinel -1, never its wall time: a crashed
     // query must be distinguishable from a fast one in the artifact.
@@ -69,13 +42,8 @@ object Bench {
         .filter { case (name, _) => only.isEmpty || only.contains(name) }
         .map { case (name, fn) =>
         if (cold) Layer.clear(spark)
-        val (tasks0, rec0, bytes0) = {
-          org.apache.spark.graftshim.ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-          maxTaskMs.set(0)
-          (taskMs.get(), shufRec.get(), shufBytesAcc.get())
-        }
-        val t0 = System.nanoTime()
-        val secs =
+        val (secs, m) = Metrics.window(spark) {
+          val t0 = System.nanoTime()
           try {
             require(!break.contains(name), s"SPARK_GRAFT_BENCH_BREAK: $name")
             fn(spark, sfDir).count()
@@ -85,17 +53,16 @@ object Bench {
               errors += s"$tag:$name" -> e.toString.take(200).replaceAll("[\"\\\\\\n]", " ")
               -1.0
           }
-        org.apache.spark.graftshim.ListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
-        taskTimes += s"$tag:$name" -> (taskMs.get() - tasks0)
-        shufRecs += s"$tag:$name" -> (shufRec.get() - rec0)
-        shufBytes += s"$tag:$name" -> (shufBytesAcc.get() - bytes0)
+        }
+        taskTimes += s"$tag:$name" -> m.taskMs
+        shufRecs += s"$tag:$name" -> m.shuffleWriteRows
         // a failed query's partially-accumulated max task is NOT a
         // measurement — record the same -1 sentinel as its wall so the
         // artifact can't present a crash as a real straggler reading
-        maxTasks += s"$tag:$name" -> (if (secs == -1.0) -1L else maxTaskMs.get())
+        maxTasks += s"$tag:$name" -> (if (secs == -1.0) -1L else m.maxTaskMs)
         // stderr progress line per query: a run killed by an external
         // timeout still leaves a per-query trail to find the hotspot
-        System.err.println(f"[bench] $tag $name%-24s ${secs}%8.2f s  task ${(taskMs.get() - tasks0) / 1000.0}%8.2f s  maxtask ${maxTaskMs.get() / 1000.0}%7.2f s  shuf ${(shufRec.get() - rec0)}%10d rows ${(shufBytesAcc.get() - bytes0) / 1048576.0}%8.1f MiB")
+        System.err.println(f"[bench] $tag $name%-24s ${secs}%8.2f s  task ${m.taskMs / 1000.0}%8.2f s  maxtask ${m.maxTaskMs / 1000.0}%7.2f s  shuf ${m.shuffleWriteRows}%10d rows ${m.shuffleWriteBytes / 1048576.0}%8.1f MiB")
         name -> secs
       }
     def fmt(m: Map[String, Double]): String =
@@ -235,7 +202,6 @@ object Bench {
     // (no neighborhood median — a post-suite retry has no pass-order
     // neighbors). Disable with SPARK_GRAFT_BENCH_RETRY=0.
     val retryTasks = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val retryWalls = scala.collection.mutable.LinkedHashMap[String, Double]()
     val retryOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY", "1") != "0"
     // SPARK_GRAFT_BENCH_FORCE_RETRY: comma-separated names treated as
     // untrusted — demonstrates the retry path on a calm box (the
@@ -250,17 +216,13 @@ object Bench {
           try {
             if (tag == "cold") Layer.clear(spark)
             else fn(spark, sfDir).count() // unmeasured: warms this query's Layers
-            org.apache.spark.graftshim.ListenerBridge
-              .waitUntilListenerBusEmpty(spark.sparkContext)
-            val tasks0 = taskMs.get()
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            val wall = (System.nanoTime() - t0) / 1e9
-            org.apache.spark.graftshim.ListenerBridge
-              .waitUntilListenerBusEmpty(spark.sparkContext)
-            retryTasks += s"$tag:$n" -> (taskMs.get() - tasks0)
-            retryWalls += s"$tag:$n" -> wall
-            System.err.println(f"[bench] retry:$tag $n%-24s $wall%8.2f s  task ${(taskMs.get() - tasks0) / 1000.0}%8.2f s")
+            val (wall, m) = Metrics.window(spark) {
+              val t0 = System.nanoTime()
+              fn(spark, sfDir).count()
+              (System.nanoTime() - t0) / 1e9
+            }
+            retryTasks += s"$tag:$n" -> m.taskMs
+            System.err.println(f"[bench] retry:$tag $n%-24s $wall%8.2f s  task ${m.taskMs / 1000.0}%8.2f s")
           } catch {
             case e: Throwable =>
               errors += s"retry:$tag:$n" -> e.toString.take(200).replaceAll("[\"\\\\\\n]", " ")

@@ -199,12 +199,9 @@ object TextAnalysis {
   /** Largest vocab-side relation the family explicitly broadcasts: 4 M
     * rows ≈ ≤ ~400 MB framed at the observed ~100 B/row (two short tokens
     * + BIGINT) — inside the guide's "a few hundred MB is usually fine"
-    * envelope and far under Spark's 8 GB / 512 M-row hard cap. Env dial
-    * for operators: SPARK_GRAFT_VOCAB_BCAST_BUDGET.
+    * envelope and far under Spark's 8 GB / 512 M-row hard cap.
     */
-  private[graft] def VocabBroadcastBudget: Long =
-    sys.env.get("SPARK_GRAFT_VOCAB_BCAST_BUDGET").map(_.toLong)
-      .getOrElse(4000000L)
+  private[graft] val VocabBroadcastBudget: Long = 4000000L
 
   private def bcastIfVocabFits(df: DataFrame, rows: Long): DataFrame =
     if (rows <= VocabBroadcastBudget) broadcast(df) else df

@@ -188,7 +188,7 @@ object ReorderModel {
     val all = assembledTrain(spark, dir)
       .select((featureCols.toIndexedSeq.map(col) :+ col("label") :+ col("features")): _*)
     // r16 A/B'd three storage shapes for the split halves at sf0.1/32c
-    // (graft.Prof, steady-state rep): columnar persist 309 task-s,
+    // (graft.Dev prof, steady-state rep): columnar persist 309 task-s,
     // localCheckpoint of the assembled frame 318, plain-column checkpoint +
     // assemble-on-read 367, NO caching 523. The original columnar persist
     // stays — the conversion passes the trainers re-run over it are cheaper

@@ -31,7 +31,7 @@ object Streams {
     * derived 2 partitions → 2.7 task-s, wall 11.2 → 2.7 s, identical rows.
     * At fleet scale the derivation grows with the input and is capped by the
     * session value (the cluster-tuned parallelism), so real state volume
-    * still spreads; `SPARK_GRAFT_STREAM_SHUFFLE` overrides for operations.
+    * still spreads.
     * Stateful checkpoints record the count in their own metadata, so pinned
     * checkpoints (s21/s22) stay self-consistent across restarts by Spark's
     * own recovery contract.
@@ -39,14 +39,12 @@ object Streams {
   private val derivedPartitions = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
   private def statePartitions(spark: SparkSession, dir: String): Int =
     derivedPartitions.computeIfAbsent(dir, _ => {
-      sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map(s => Integer.valueOf(s.trim.toInt)).getOrElse {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
-        val targetPerPartition = 2L << 20
-        val cap = spark.sessionState.conf.numShufflePartitions
-        math.max(2, math.min(cap.toLong, (bytes + targetPerPartition - 1) / targetPerPartition)).toInt
-      }
+      val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bytes = try fs.getContentSummary(p).getLength catch { case _: Exception => 0L }
+      val targetPerPartition = 2L << 20
+      val cap = spark.sessionState.conf.numShufflePartitions
+      math.max(2, math.min(cap.toLong, (bytes + targetPerPartition - 1) / targetPerPartition)).toInt
     })
 
   /** Run `body` (a streaming start+await) with the derived state

@@ -206,29 +206,11 @@ class OpsSpec extends SparkSuite {
       (1 to 2000).map(i => (s"k${i % 20}", (i % 64).toLong))
     val df = rows.toDF("k", "v").repartition(8)
 
+    // the recorder's window closes on a listener-bus drain, so the max is
+    // read after every task-end event of the run has arrived
     def maxTaskShuffleRead(run: () => Array[(String, Seq[Long])]): (Long, Array[(String, Seq[Long])]) = {
-      val max = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null) {
-            val b = t.taskMetrics.shuffleReadMetrics.totalBytesRead
-            max.getAndUpdate(x => math.max(x, b))
-          }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val out = run()
-        // listener events are posted asynchronously — wait until the max
-        // stops moving rather than reaching into the private listener bus
-        var prev = -1L
-        var same = 0
-        while (same < 3) {
-          Thread.sleep(200)
-          val cur = max.get()
-          if (cur == prev) same += 1 else { same = 0; prev = cur }
-        }
-        (max.get(), out)
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (out, m) = Metrics.window(spark)(run())
+      (m.maxShuffleReadBytes, out)
     }
 
     def canon(df: org.apache.spark.sql.DataFrame): Array[(String, Seq[Long])] =

@@ -3,20 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for test suites — mirrors the driver's Verify
-  * config (UTC, small shuffle partitions, nanos-as-long).
+/** Shared local session for test suites — the mains' constructor at 4
+  * cpus / 4 shuffle partitions.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Testdata parquet may carry naive timestamp[us] (no UTC annotation);
-    // read it as TIMESTAMP (LTZ @ UTC session zone), matching the oracle.
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("4")
 
   val sf: String = "/root/testdata/sf0.001"
 }
