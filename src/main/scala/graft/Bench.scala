@@ -27,8 +27,8 @@ object Bench {
     //    inversions) — task time only counts cycles THIS query's tasks ran,
     //    so a regression is adjudicable without a quiet-VM re-run;
     //  - shuffle write rows + bytes: the exchange-size signal that
-    //    adjudicates plan-shape claims (e.g. x271 vs x272 — bounded-heap
-    //    prune vs shuffle-everything window) in the artifact itself;
+    //    adjudicates plan-shape claims (e.g. a map-side top-k prune vs a
+    //    shuffle-everything window) in the artifact itself;
     //  - the longest single task: the STRAGGLER signal a task total cannot
     //    show (a one-key serialization leaves totals near the balanced
     //    plan's while one task IS the stage wall).

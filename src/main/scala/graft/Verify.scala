@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py). Queries that
+  * throw are listed with their messages in failures.json (written only
+  * when one fails), so a crashed query is never just a missing directory.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -12,6 +15,7 @@ object Verify {
     // dump for local iteration (unset = all queries, the driver's config).
     val only = sys.env.getOrElse("SPARK_GRAFT_VERIFY_ONLY", "")
       .split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
       .foreach { case (name, fn) =>
@@ -19,6 +23,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failures(name) = String.valueOf(e.getMessage)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -36,6 +41,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a stale list from an earlier run into the same directory must not
+    // outlive a clean run
+    val failuresPath = Paths.get(s"$outDir/failures.json")
+    Files.deleteIfExists(failuresPath)
+    if (failures.nonEmpty) Files.writeString(failuresPath,
+      failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -379,14 +379,17 @@ object Similarity {
     val adc = codes.join(broadcast(lut), Seq("s", "code"))
       .groupBy("qid", "vec_id")
       .agg(sum(col("lut_e6")).as("adc_e6"))
-    // sortPartial = false: the few-queries/many-candidates profile — the
-    // heap partial holds <= poolK rows per qid (pool-sized state, no
-    // partition buffer); sorting the ADC stream to keep a 50-row pool
-    // would be the wrong trade (see TopKPerKey's discipline scaladoc)
-    val pool = graft.plans.TopKPerKey.of(adc, "qid", "adc_e6", "vec_id", poolK, "prnk",
-      sortPartial = false)
-    exactRerank(e, pool, topK)
+    exactRerank(e, adcPool(adc, poolK), topK)
   }
+
+  /** The top-`poolK` ADC candidates per query (adc DESC, vec_id ASC) —
+    * the literal rank filter lets Spark 4 plan WindowGroupLimit(Partial)
+    * below the exchange, so at most poolK rows per (qid, partition) ship.
+    */
+  private def adcPool(adc: DataFrame, poolK: Int): DataFrame =
+    adc.withColumn("prnk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("adc_e6").desc, col("vec_id"))))
+      .filter(col("prnk") <= poolK)
 
   /** The exact-cosine re-rank of a (qid, vec_id, adc_e6) shortlist —
     * shared by x262 and x266; pool-bounded window partitions.
@@ -445,13 +448,7 @@ object Similarity {
       .join(broadcast(lut), Seq("qid", "s", "code"))
       .groupBy("qid", "vec_id")
       .agg(sum(col("lut_e6")).as("adc_e6"))
-    // sortPartial = false: the few-queries/many-candidates profile — the
-    // heap partial holds <= poolK rows per qid (pool-sized state, no
-    // partition buffer); sorting the ADC stream to keep a 50-row pool
-    // would be the wrong trade (see TopKPerKey's discipline scaladoc)
-    val pool = graft.plans.TopKPerKey.of(adc, "qid", "adc_e6", "vec_id", poolK, "prnk",
-      sortPartial = false)
-    exactRerank(e, pool, topK)
+    exactRerank(e, adcPool(adc, poolK), topK)
   }
 
   /** x262 oracle — the [[pqTopK]] fit, encode, LUT, and ADC rank

@@ -35,9 +35,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("int8_dot", 2)(es => Int8Dot(es(0), es(1)))
     fn("deflate_ratio", 1)(es => DeflateRatio(es.head))
     ext.injectOptimizerRule(_ => HammingIdentityFold)
-    // rung (c) in full: the custom per-key top-k physical operator's
-    // strategy, active for any session built with this extension (the
-    // live-session path self-registers via TopKPerKey.of)
+    // rung (c) in full: the variable-k per-key top-k operator's strategy,
+    // active for any session built with this extension (the live-session
+    // path self-registers via TopKPerKey.ofVarK)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }

@@ -78,6 +78,17 @@ object ReorderModel {
       .setInputCol("prediction").setOutputCol("predicted_label")
       .transform(pred)
 
+  /** The binarized (predicted_label, label) → row-count confusion matrix
+    * of one scored frame — one tiny aggregate, collected;
+    * an absent cell reads 0.
+    */
+  private def confusion(scored: DataFrame): Map[(Double, Double), Long] =
+    binarize(scored).groupBy("predicted_label", "label").count().collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap
+      .withDefaultValue(0L)
+
+  private def r4(v: Double): Double = math.rint(v * 10000) / 10000
+
   /** Train RF on the train matrix, predict the test matrix, emit the
     * submission table (M2+M5+M6 + F.py:296–315 formatting).
     */
@@ -148,10 +159,7 @@ object ReorderModel {
     def evalFold(f: Long): (Long, Long, Double, Double) = {
       val test = all.filter(col("fold") === f)
       val model = rf.fit(all.filter(col("fold") =!= f))
-      val cm = binarize(model.transform(test))
-        .groupBy("predicted_label", "label").count().collect()
-        .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap
-        .withDefaultValue(0L)
+      val cm = confusion(model.transform(test))
       val total = cm.values.sum
       val correct = cm((0.0, 0.0)) + cm((1.0, 1.0))
       val tp = cm((1.0, 1.0)).toDouble
@@ -160,7 +168,6 @@ object ReorderModel {
       val p = if (predPos == 0) 0.0 else tp / predPos
       val r = if (actPos == 0) 0.0 else tp / actPos
       val f1 = if (p + r == 0) 0.0 else 2 * p * r / (p + r)
-      def r4(v: Double): Double = math.rint(v * 10000) / 10000
       (f, total, r4(correct.toDouble / total), r4(f1))
     }
     // folds run SEQUENTIALLY, deliberately: each tree fit already uses
@@ -200,10 +207,7 @@ object ReorderModel {
     // derive from the same counts, matching
     // MulticlassClassificationEvaluator's weighted definitions.
     def evalOne(name: String, model: org.apache.spark.ml.Model[_]): (String, Double, Double, Double, Double) = {
-      val cm = binarize(model.transform(holdout))
-        .groupBy("predicted_label", "label").count().collect()
-        .map(r => (r.getDouble(0), r.getDouble(1)) -> r.getLong(2)).toMap
-        .withDefaultValue(0L)
+      val cm = confusion(model.transform(holdout))
       val classes = Seq(0.0, 1.0)
       val total = cm.values.sum.toDouble
       val correct = classes.map(c => cm((c, c))).sum.toDouble
@@ -224,7 +228,6 @@ object ReorderModel {
         val p = precision(c); val r = recall(c)
         if (p + r == 0) 0.0 else 2 * p * r / (p + r)
       }
-      def r4(v: Double): Double = math.rint(v * 10000) / 10000
       (name, r4(correct / total), r4(weighted(precision)), r4(weighted(recall)), r4(weighted(f1)))
     }
     // The three fits are independent — submit them as concurrent Spark jobs
@@ -240,14 +243,12 @@ object ReorderModel {
       "rf"  -> Future(rf.fit(fit)),
       "gbt" -> Future(gbt.fit(fit)),
       "dt"  -> Future(dt.fit(fit)))
-    val out = fits
-      .map { case (n, f) => evalOne(n, Await.result(f, 15.minutes)) }
-      .toDF("model", "accuracy", "weightedPrecision", "weightedRecall", "f1")
-      .orderBy("model")
-    val materialized = out.cache()
-    materialized.count()
+    // the rows are already computed here, so the returned frame is a
+    // local relation that needs no cache of its own
+    val rows = fits.map { case (n, f) => evalOne(n, Await.result(f, 15.minutes)) }
     fit.unpersist(); holdout.unpersist()
-    materialized
+    rows.toDF("model", "accuracy", "weightedPrecision", "weightedRecall", "f1")
+      .orderBy("model")
   }
 
   /** m05: implicit-feedback ALS recommendations — the canonical Spark

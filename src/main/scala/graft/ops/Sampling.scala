@@ -257,16 +257,16 @@ object Sampling {
     * the quotient floors ONCE to an e15 integer, so the comparator both
     * engines sort on is exact).
     *
-    * Routed through [[graft.plans.TopKPerKey]] deliberately: per-stratum
-    * quota with caller-supplied k is the NON-LITERAL pattern the r10
-    * pair measurement reserves the custom operator for (no statically
-    * visible `rank ≤ literal` filter for InferWindowGroupLimit), and the
-    * partial phase bounds the exchange to k rows per (source, input
-    * partition) — at 100 TB the sample leaves each executor
-    * quota-sized, never corpus-sized. u = (md5 48-bit + 1)/2⁴⁸ ∈
-    * (0, 1] — never 0, so ln is finite; w ≥ 1 tokens.
+    * The per-stratum quota is the `row_number() ≤ k` window idiom: k
+    * reaches the plan as a literal, so Spark 4's InferWindowGroupLimit
+    * plans WindowGroupLimit(Partial) below the exchange and at most k
+    * rows per (source, input partition) ship — at 100 TB the sample
+    * leaves each executor quota-sized, never corpus-sized.
+    * u = (md5 48-bit + 1)/2⁴⁸ ∈ (0, 1] — never 0, so ln is finite;
+    * w ≥ 1 tokens.
     */
   def stratifiedAes(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val u = (conv(substring(md5(concat(col("doc_id").cast("string"),
       lit(":aes"))), 1, 12), 16, 10).cast("long") + lit(1L)).cast("double") /
       lit(281474976710656.0d)
@@ -275,13 +275,9 @@ object Sampling {
         size(split(col("text"), " ")).cast("long").as("w"))
       .withColumn("key_e15",
         floor(log(u) / col("w").cast("double") * lit(1e15d)).cast("long"))
-    // sortPartial = false: the quota profile (20 strata, fact-sized
-    // partitions) is exactly where the bounded heap wins — steady-state
-    // rejection is one compare with no allocation and the partial holds
-    // ≤ k rows per stratum, while the sorted discipline would buffer and
-    // order the WHOLE document partition to keep 200 rows of it
-    graft.plans.TopKPerKey.of(keyed, "source", "key_e15", "doc_id", k, "rnk",
-        sortPartial = false)
+    keyed.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("source")).orderBy(col("key_e15").desc, col("doc_id"))))
+      .filter(col("rnk") <= k)
       .select(col("source"), col("rnk"), col("doc_id"), col("w"), col("key_e15"))
       .orderBy(col("source"), col("rnk"))
   }

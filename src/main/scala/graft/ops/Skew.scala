@@ -16,57 +16,34 @@ object Skew {
     * Works for any algebraic aggregate supplied as (partial, combine)
     * pairs; the count/sum convenience below covers the common case.
     *
-    * Two salt modes — reproducibility vs spread, an inherent trade-off:
-    *
-    *  - `deterministicSalt = true` (default): salt = xxhash64 of every
-    *    column. Row→salt never depends on partition layout, so the
-    *    row→partial-sum GROUPING is run-stable (the old positional salt
-    *    regrouped rows every run). Combine ORDER within a reducer can
-    *    still follow shuffle-fetch arrival on a real cluster, so strict
-    *    bit-for-bit double reproduction additionally needs an
-    *    order-independent accumulator (decimal/integral sums) — in
-    *    local mode fetch order is stable and sums reproduce exactly.
-    *    Caveat: IDENTICAL rows share a salt, so a hot key whose rows are
-    *    duplicates (e.g. a projected key-only frame) still lands on one
-    *    reducer — content hashing cannot distinguish identical content.
-    *    That duplicate-heavy shape is exactly what positional mode is
-    *    for: pass `deterministicSalt = false` there (counts/integer sums
-    *    are order-independent, so nothing is lost). Deterministic stays
-    *    the DEFAULT because a silently layout-dependent aggregation is
-    *    the worse failure mode for the hash-checked pipeline this
-    *    library feeds; mixing a position term into the content hash
-    *    would just be positional mode with extra steps.
-    *  - `deterministicSalt = false`: salt = round-robin over physical row
-    *    position (partition id + local id). Spreads even duplicate rows
-    *    uniformly, but row→salt varies across runs/layouts, so use it
-    *    only when the aggregates are order-independent (counts, integer /
-    *    decimal sums, min/max) — which covers most heavy-hitter cases.
+    * Salt = xxhash64 of every column, so row→salt never depends on
+    * partition layout and the row→partial-sum GROUPING is run-stable.
+    * Combine ORDER within a reducer can still follow shuffle-fetch
+    * arrival on a real cluster, so strict bit-for-bit double
+    * reproduction additionally needs an order-independent accumulator
+    * (decimal/integral sums) — in local mode fetch order is stable and
+    * sums reproduce exactly. Caveat: IDENTICAL rows share a salt, so a
+    * hot key whose rows are duplicates (e.g. a projected key-only frame)
+    * still lands on one reducer — content hashing cannot distinguish
+    * identical content; the result stays exact.
     */
   def saltedAgg(df: DataFrame, key: Seq[String], salt: Int,
-                partial: Seq[Column], combine: Seq[Column],
-                deterministicSalt: Boolean = true): DataFrame = {
-    val saltCol =
-      if (deterministicSalt)
-        pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(salt.toLong))
-      else
-        pmod(spark_partition_id().cast("long") + monotonically_increasing_id(),
-          lit(salt.toLong))
-    df.withColumn("__salt", saltCol)
+                partial: Seq[Column], combine: Seq[Column]): DataFrame =
+    df.withColumn("__salt",
+        pmod(xxhash64(df.columns.map(col).toIndexedSeq: _*), lit(salt.toLong)))
       .groupBy((key.map(col) :+ col("__salt")): _*)
       .agg(partial.head, partial.tail: _*)
       .groupBy(key.map(col): _*)
       .agg(combine.head, combine.tail: _*)
-  }
 
   /** Salted count + sum — equivalent to
     * groupBy(key).agg(count(*) as n, sum(valueCol) as total).
     */
   def saltedCountSum(df: DataFrame, key: Seq[String], valueCol: String,
-                     salt: Int = 16, deterministicSalt: Boolean = true): DataFrame =
+                     salt: Int = 16): DataFrame =
     saltedAgg(df, key, salt,
       partial = Seq(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s")),
-      combine = Seq(sum(col("__n")).as("n"), sum(col("__s")).as("total")),
-      deterministicSalt = deterministicSalt)
+      combine = Seq(sum(col("__n")).as("n"), sum(col("__s")).as("total")))
 
   /** x188: key-skew profile — the PRE-JOIN audit that decides between
     * the x45 (partial-agg absorb) and x46 (AQE skew-split) strategies

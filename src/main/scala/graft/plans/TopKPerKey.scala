@@ -7,73 +7,48 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-key exact top-k as a FIRST-CLASS operator — rung (c) of the
-  * custom-operator ladder in full: a logical node, a planner strategy,
-  * and a two-phase physical pair, registered per-session through the
-  * PUBLIC `spark.experimental.extraStrategies` hook (and available at
-  * build time via graft.functions.GraftExtensions' injectPlannerStrategy).
+/** Per-key exact top-k with a PER-KEY quota k read from a column — a
+  * logical node, a planner strategy, and a two-phase physical pair,
+  * registered per-session through the PUBLIC
+  * `spark.experimental.extraStrategies` hook (and available at build time
+  * via graft.functions.GraftExtensions' injectPlannerStrategy).
   *
-  * WHY an operator instead of the window idiom
-  * (`row_number().over(partitionBy(key).orderBy(...)) <= k`): the window
-  * must shuffle EVERY input row to its key's reducer and sort the whole
-  * group before it can discard rank k+1 — there is no partial
-  * aggregation for row_number, so a 100 TB fact crossing the exchange IS
-  * the plan. Top-k per key, however, combines map-side exactly like a
-  * sum: each input partition independently keeps at most k rows per key
-  * (provably sufficient — any row outside a partition-local top-k is
-  * outside the global top-k), so the exchange ships ≤ k·partitions rows
-  * PER KEY regardless of fact size, and the final phase re-prunes the
-  * ≤ k·P survivors. Same exactness, shuffle bytes shrunk by the
-  * group-size/k ratio. (On Spark 4, `InferWindowGroupLimit` already
-  * plans this map-side prune for the LITERAL `row_number() ≤ k` filter
-  * idiom; this operator exists for the regimes where the inference
-  * cannot fire — computed k, rank consumed as a column, composition
-  * inside larger plans — see the x271/x272 measured pair.)
+  * WHY an operator: top-k per key combines map-side exactly like a sum —
+  * each input partition keeps at most k rows per key (any row outside a
+  * partition-local top-k is outside the global top-k), so the exchange
+  * ships ≤ k·P rows per key regardless of fact size. For a LITERAL k,
+  * Spark 4's `InferWindowGroupLimit` plans exactly this prune for the
+  * `row_number().over(partitionBy(key).orderBy(...)) <= k` idiom
+  * (WindowGroupLimit(Partial) below the exchange), so every literal-k
+  * query in this repo writes the window idiom (x261, x271/x272, x282
+  * below; the x262/x266 pools and x274 elsewhere). With k a runtime column
+  * there is no literal rank filter for the inference to see and the
+  * window idiom ships every row; this operator still bounds the exchange
+  * at Σ min(k_key, rows) per partition.
   *
-  * TWO partial disciplines, chosen by the caller's group profile
-  * (round-11, closing the r10 ~30% interpreted-heap gap):
+  * Both execs require a child ordering of (key ASC, order DESC, tie ASC);
+  * EnsureRequirements plans Spark's own SortExec for it, and each phase
+  * is an allocation-free streaming group-limit over the sorted rows.
   *
-  *  - `sortPartial = true` (default): the exec nodes REQUIRE a child
-  *    ordering of (key ASC, order DESC, tie ASC); EnsureRequirements
-  *    plans Spark's own SortExec (UnsafeExternalRowSorter with a
-  *    generated comparator — the exact machinery WindowGroupLimit's
-  *    fast path rides, radix-sorting the sort prefix, spill-safe), and
-  *    the partial degenerates to an allocation-free streaming
-  *    group-limit scan. Re-measured at m30: the heap partial paid +39%
-  *    task time vs the window idiom on a 600 k-key profile (the per-key
-  *    HashMap+PriorityQueue state goes cache-hostile as distinct keys
-  *    per partition grow); the sorted partial is the window plan's own
-  *    shape, so the gap is zero by construction.
-  *  - `sortPartial = false`: the original bounded-heap prune — state is
-  *    ≤ k rows per distinct key in the partition (output-sized, NEVER
-  *    partition-sized, nothing buffers or spills). This is the right
-  *    discipline when keys are FEW and rows per key are fact-scale (the
-  *    x274 A-ES quota profile: 20 strata × top-10 over the whole
-  *    corpus): steady-state rejection is one compare against the heap
-  *    head with no allocation, while a sort would buffer and order the
-  *    entire fact partition to keep 200 rows of it.
-  *
-  * Semantics (identical under both disciplines, asserted by the
-  * PlansSpec equivalence law): rows ranked per key by (order DESC, tie
-  * ASC); tie unique per key is the caller's determinism contract, same
-  * as every window query in this repo. Rows with a NULL order or tie
-  * are dropped — documented, mirrored in oracles via `WHERE order IS
-  * NOT NULL`. The output schema is the child's columns plus an
-  * IntegerType rank (1-based).
+  * Semantics: rows ranked per key by (order DESC, tie ASC); tie unique
+  * per key is the caller's determinism contract. Rows with a NULL order
+  * or tie are dropped, and a null or non-positive quota drops its key.
+  * Keys must be atomic and non-binary (compared by value equality);
+  * float/double keys follow boxed equality, so normalize -0.0/NaN first
+  * if the source can produce them. The output schema is the child's
+  * columns plus an IntegerType rank (1-based).
   */
 case class TopKPerKey(
     key: Expression,
     order: Expression,
     tie: Expression,
-    k: Int,
+    kCol: Expression,
     rankAttr: AttributeReference,
-    child: LogicalPlan,
-    sortPartial: Boolean = true,
-    kCol: Option[Expression] = None) extends UnaryNode {
-  require(kCol.isDefined || k >= 1, s"top-k needs k >= 1, got $k")
+    child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
@@ -81,26 +56,17 @@ case class TopKPerKey(
 }
 
 object TopKPerKey {
-  /** DataFrame-level entry: plans `df` through the custom operator. The
-    * strategy registration on `spark.experimental.extraStrategies` is
-    * idempotent and session-scoped (the same documented posture as
-    * streamingDistinct's provider conf). `sortPartial` picks the partial
-    * discipline — see the class scaladoc for the profile guidance.
+  /** DataFrame-level entry: per-key k read from the LongType column
+    * `kCol` (constant within a key). Registers the strategy on
+    * `spark.experimental.extraStrategies` (idempotent, session-scoped),
+    * resolves the columns against the ANALYZED child (the node is built
+    * below the analyzer's unresolved-column machinery), and checks at
+    * plan time what would otherwise fail mid-job: order/tie/quota must
+    * be LongType (the scan compares them as primitive longs) and the key
+    * must be atomic and non-binary.
     */
-  def of(df: DataFrame, key: String, order: String, tie: String, k: Int,
-         rankName: String = "rank", sortPartial: Boolean = true): DataFrame =
-    plan(df, key, order, tie, k, rankName, sortPartial, kCol = None)
-
-  /** Shared plan builder for [[of]] / [[ofVarK]]: idempotent strategy
-    * registration, resolution against the ANALYZED child (the node is
-    * built below the analyzer's unresolved-column machinery, so its
-    * expressions must already be bound attributes), and the plan-time
-    * LongType check (the physical scan compares order/tie/quota as
-    * primitive longs; anything else would ClassCastException mid-job).
-    */
-  private def plan(df: DataFrame, key: String, order: String, tie: String,
-                   k: Int, rankName: String, sortPartial: Boolean,
-                   kCol: Option[String]): DataFrame = {
+  def ofVarK(df: DataFrame, key: String, order: String, tie: String, kCol: String,
+             rankName: String = "rank"): DataFrame = {
     val spark = df.sparkSession
     if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
       spark.experimental.extraStrategies =
@@ -112,56 +78,25 @@ object TopKPerKey {
         s"TopKPerKey: no column '$name' in ${analyzed.output.map(_.name).mkString(", ")}"))
     def longAttr(name: String): Attribute = {
       val a = attr(name)
-      require(a.dataType == org.apache.spark.sql.types.LongType,
+      require(a.dataType == LongType,
         s"TopKPerKey: column '$name' must be LongType (cast it first), got ${a.dataType.simpleString}")
       a
     }
-    // Key-type gate (round-13: struct/binary/array keys UNLOCKED via the
-    // TopKPrune.keyReader projection codec — composite keys no longer
-    // need a manual concat). What must still be refused at PLAN time is
-    // any type whose equal values lack a canonical byte form: a MAP's
-    // entry order is unspecified, so two logically equal maps can
-    // serialize differently and would silently split one group in two.
-    // Float/double keys (atomic or nested) follow raw-bits equality like
-    // Spark's own hash aggregation pre-normalization: normalize -0.0/NaN
-    // first if the source can produce them.
     val keyAttr = attr(key)
-    def refuseMaps(dt: org.apache.spark.sql.types.DataType): Unit = dt match {
-      case _: org.apache.spark.sql.types.MapType =>
-        throw new IllegalArgumentException(
-          s"TopKPerKey: key '$key' contains a map type " +
-            s"(${keyAttr.dataType.simpleString}) — maps have no canonical " +
-            "byte order, so equal keys could split groups; restructure the " +
-            "key as a struct or sorted array first")
-      case s: org.apache.spark.sql.types.StructType => s.fields.foreach(f => refuseMaps(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => refuseMaps(a.elementType)
-      case _ => ()
+    keyAttr.dataType match {
+      case _: NumericType | _: StringType | BooleanType | DateType | TimestampType
+           | TimestampNTZType => ()
+      case other => throw new IllegalArgumentException(
+        s"TopKPerKey: key '$key' must be an atomic non-binary type, got " +
+          s"${other.simpleString} — rank composite keys with the row_number() window idiom")
     }
-    refuseMaps(keyAttr.dataType)
-    val node = TopKPerKey(keyAttr, longAttr(order), longAttr(tie), k,
-      AttributeReference(rankName, IntegerType, nullable = false)(), analyzed,
-      sortPartial, kCol = kCol.map(longAttr))
+    val node = TopKPerKey(keyAttr, longAttr(order), longAttr(tie), longAttr(kCol),
+      AttributeReference(rankName, IntegerType, nullable = false)(), analyzed)
     org.apache.spark.sql.graftshim.ColumnBridge.ofRows(spark, node)
   }
 
-  /** VARIABLE-QUOTA entry: per-key k read from a LongType COLUMN (the
-    * caller's contract: constant within a key; a null or non-positive
-    * quota drops the key). This is the operator's reason to exist in its
-    * purest form — with k a runtime column there is no literal
-    * `row_number() ≤ k` filter anywhere in the plan, so Spark's
-    * InferWindowGroupLimit can NEVER plan the map-side prune for the
-    * window idiom (it ships every fact row), while this partial still
-    * bounds the exchange at Σ min(k_key, rows) per partition.
-    */
-  def ofVarK(df: DataFrame, key: String, order: String, tie: String, kCol: String,
-             rankName: String = "rank", sortPartial: Boolean = true): DataFrame =
-    plan(df, key, order, tie, k = 1, rankName, sortPartial, kCol = Some(kCol))
-
-  /** x261: top-3 parts per brand by exact revenue — the custom operator
-    * on the correctness path: the per-(brand, part) revenue aggregate
-    * (exact e2 cents) flows through [[TopKPerKey]], so the gate
-    * hash-checks the whole logical-node → strategy → two-phase-exec
-    * stack against the window-idiom SQL it replaces.
+  /** x261: top-3 parts per brand by exact revenue (exact e2 cents),
+    * hash-checked against the same window-idiom SQL.
     */
   def topBrandParts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -173,7 +108,9 @@ object TopKPerKey {
         col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand", "l_partkey")
       .agg(sum(col("cents")).as("rev_e2"))
-    of(rev, "p_brand", "rev_e2", "l_partkey", 3, "rnk")
+    rev.withColumn("rnk", row_number().over(
+        Window.partitionBy("p_brand").orderBy(col("rev_e2").desc, col("l_partkey"))))
+      .filter(col("rnk") <= 3)
       .orderBy("p_brand", "rnk")
   }
 
@@ -190,16 +127,9 @@ object TopKPerKey {
       |  FROM rev)
       |WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin
 
-  /** x282: the STRUCT-KEY gate (round-13, verdict #6) — top-2 parts per
-    * (brand, size) COMPOSITE key (string + int fields) through [[TopKPerKey]], the shape
-    * the r12 plan-time refusal forced callers to concat by hand. The key
-    * is a two-field struct column; the partial/final execs group on its
-    * canonical UnsafeProjection bytes ([[TopKPrune.keyReader]]), the
-    * exchange hash-partitions on the struct, and the sorted discipline's
-    * EnsureRequirements sort orders it field-wise — all public Spark
-    * machinery. Hash-matched against the PARTITION BY b, c window idiom,
-    * so the whole composite-key path (projection codec, boundary compare,
-    * struct exchange) sits on the correctness gate.
+  /** x282: top-2 parts per (brand, size) COMPOSITE key (string + int
+    * fields) — the two-column partition key plans the same
+    * WindowGroupLimit(Partial) prune as a single-column one.
     */
   def topBrandContainerParts(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -211,9 +141,9 @@ object TopKPerKey {
         col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand", "p_size", "l_partkey")
       .agg(sum(col("cents")).as("rev_e2"))
-      .withColumn("bc", struct(col("p_brand"), col("p_size")))
-    of(rev, "bc", "rev_e2", "l_partkey", 2, "rnk")
-      .select("p_brand", "p_size", "l_partkey", "rev_e2", "rnk")
+    rev.withColumn("rnk", row_number().over(
+        Window.partitionBy("p_brand", "p_size").orderBy(col("rev_e2").desc, col("l_partkey"))))
+      .filter(col("rnk") <= 2)
       .orderBy("p_brand", "p_size", "rnk")
   }
 
@@ -233,8 +163,7 @@ object TopKPerKey {
   /** x279: TIERED per-brand quota ranking — the variable-k regime made a
     * gate query: each brand keeps its top-`quota` parts by exact revenue,
     * where quota = 1 + (brand number mod 3) is a RUNTIME COLUMN (in
-    * production: a curation tier read from a config dim). This is the
-    * plan shape the operator exists for in its purest form — no literal
+    * production: a curation tier read from a config dim). No literal
     * rank filter exists anywhere, so InferWindowGroupLimit cannot plan
     * the window idiom's map-side prune (it would ship every (brand,
     * part) row), while [[TopKPerKey]]'s partial still bounds the
@@ -271,51 +200,26 @@ object TopKPerKey {
       |  FROM q)
       |WHERE rnk <= quota ORDER BY p_brand, rnk""".stripMargin
 
-  /** The FACT-GRAIN measured pair (x271 / x272): top-2 lineitems per
-    * part, straight off the raw lineitem scan — no pre-aggregate, so the
-    * exchange carries whatever the chosen idiom lets through. x271 routes
-    * through [[TopKPerKey]]; x272 is the row_number() window idiom a
-    * migrating user writes first. Identical semantics, identical oracle.
-    *
-    * WHAT THE MEASUREMENTS FOUND: on Spark 4 the two plans shuffle the
-    * same rows TO THE ROW — `InferWindowGroupLimit` plans Sort →
-    * WindowGroupLimit(Partial) BELOW the exchange whenever a literal
-    * `row_number() ≤ k` filter is statically visible (SCALE.md r10).
-    * The r10 task-time gap (~30% against the interpreted bounded heap,
-    * re-confirmed +39% at m30's 600 k-key profile) is CLOSED in r11 by
-    * the sorted partial, which is the window plan's own
-    * sort-then-group-limit shape. Guidance stands: write the window
-    * idiom when the rank filter is a literal; reach for [[TopKPerKey]]
-    * when the inference cannot fire — computed/per-key k, rank consumed
-    * as a column without a filter, composition inside a larger logical
-    * plan, or the few-strata quota profile where `sortPartial = false`
-    * keeps the partial buffer-free (x274's constant 801-row exchange).
+  /** x271 / x272: top-2 lineitems per part, straight off the raw lineitem
+    * scan — no pre-aggregate, so the exchange carries whatever the plan
+    * lets through. Both query names run this one window idiom (names and
+    * hashes are kept; SCALE.md r10 measured the custom operator shipping
+    * the same rows). `InferWindowGroupLimit` plans Sort →
+    * WindowGroupLimit(Partial) BELOW the exchange for the literal
+    * `row_number() ≤ 2` filter.
     *
     * tie = orderkey·8 + linenumber (linenumber ∈ 1..7) — a single exact
     * BIGINT total order, same expression both engines.
     */
-  private def factGrain(spark: SparkSession, dir: String): DataFrame = {
+  def topFactPerPartWindow(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.Tables.lineitem(spark, dir)
+    val fact = graft.Tables.lineitem(spark, dir)
       .select(col("l_partkey"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("cents"),
         (col("l_orderkey").cast("long") * lit(8L)
           + col("l_linenumber").cast("long")).as("tie"))
-  }
-
-  def topFactPerPart(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    of(factGrain(spark, dir), "l_partkey", "cents", "tie", 2, "rnk")
-      .orderBy("l_partkey", "rnk")
-  }
-
-  def topFactPerPartWindow(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("l_partkey")
-      .orderBy(col("cents").desc, col("tie"))
-    factGrain(spark, dir)
-      .withColumn("rnk", row_number().over(w))
+    fact.withColumn("rnk", row_number().over(
+        Window.partitionBy("l_partkey").orderBy(col("cents").desc, col("tie"))))
       .filter(col("rnk") <= 2)
       .orderBy("l_partkey", "rnk")
   }
@@ -334,132 +238,49 @@ object TopKPerKey {
       |WHERE rnk <= 2 ORDER BY l_partkey, rnk""".stripMargin
 }
 
-/** Plans the logical node as (sort) → partial-prune → exchange →
-  * (sort) → final-rank. Under `sortPartial` the sorts come from
-  * EnsureRequirements satisfying the execs' requiredChildOrdering —
-  * Spark's own codegen'd sorter, never hand-rolled.
+/** Plans the logical node as sort → partial-prune → exchange → sort →
+  * final-rank. The sorts come from EnsureRequirements satisfying the
+  * execs' requiredChildOrdering — Spark's own codegen'd sorter.
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case t: TopKPerKey =>
-      val partial = TopKPerKeyPartialExec(t.key, t.order, t.tie, t.k,
-        planLater(t.child), t.sortPartial, t.kCol)
-      TopKPerKeyFinalExec(t.key, t.order, t.tie, t.k, t.rankAttr, partial,
-        t.sortPartial, t.kCol) :: Nil
+      val partial = TopKPerKeyPartialExec(t.key, t.order, t.tie, t.kCol, planLater(t.child))
+      TopKPerKeyFinalExec(t.key, t.order, t.tie, t.kCol, t.rankAttr, partial) :: Nil
     case _ => Nil
   }
 }
 
 /** Shared pruning kernels over an InternalRow iterator. */
 private[plans] object TopKPrune {
-  final case class Entry(ord: Long, tie: Long, row: InternalRow)
-  // PriorityQueue dequeues the MAX under this ordering, so "max" must be
-  // the WORST retained row: lowest order value, then highest tie.
-  val worstFirst: Ordering[Entry] = (a: Entry, b: Entry) => {
-    val c = java.lang.Long.compare(b.ord, a.ord)
-    if (c != 0) c else java.lang.Long.compare(a.tie, b.tie)
-  }
-
-  def better(a: Entry, b: Entry): Boolean = worstFirst.compare(a, b) < 0
-
-  /** Key codec (round-13): how a grouping key is read off a row and held
-    * across rows. Atomic value types eval directly (their boxed values
-    * are value-comparable; UTF8String is copied when held because scan
-    * buffers are reused). STRUCT / ARRAY / BINARY keys are canonicalized
-    * through an UnsafeProjection into a single-field UnsafeRow whose
-    * byte-wise equals/hashCode is Spark's own hash-aggregation key
-    * discipline — equal map-free values always serialize to equal bytes,
-    * which is exactly why MapType keys are refused at plan time. Returns
-    * (read, copyOf): `read` may hand back a buffer-reused value; `copyOf`
-    * makes it safe to hold. Build INSIDE mapPartitions (the projection is
-    * not serializable).
-    */
-  def keyReader(keyB: Expression): (InternalRow => Any, Any => Any) =
-    keyB.dataType match {
-      case _: org.apache.spark.sql.types.StructType
-           | _: org.apache.spark.sql.types.ArrayType
-           | org.apache.spark.sql.types.BinaryType =>
-        val proj = UnsafeProjection.create(Seq(keyB))
-        (row => proj(row), {
-          case r: org.apache.spark.sql.catalyst.expressions.UnsafeRow => r.copy()
-          case other => other
-        })
-      case _ =>
-        (row => keyB.eval(row), {
-          case s: UTF8String => s.copy()
-          case other => other
-        })
-    }
-
-  /** The (key ASC, order DESC, tie ASC) requirement the sorted discipline
-    * asks of EnsureRequirements — order DESC carries NULLS LAST and tie
-    * ASC NULLS FIRST (Spark defaults), but null placement is irrelevant:
-    * the scan drops null-ordered rows wherever they land.
+  /** The (key ASC, order DESC, tie ASC) requirement both execs ask of
+    * EnsureRequirements — null placement is irrelevant: the scan drops
+    * null-ordered rows wherever they land.
     */
   def requiredOrdering(key: Expression, order: Expression, tie: Expression): Seq[SortOrder] =
     Seq(SortOrder(key, Ascending), SortOrder(order, Descending), SortOrder(tie, Ascending))
 
-  /** Per-row retention limit: the static k, or — under the variable-k
-    * discipline — the bound quota column (LongType; null → 0, clamped to
-    * Int range).
+  /** Per-row retention limit: the bound quota column (LongType; null →
+    * 0, clamped to Int range).
     */
-  def limiter(k: Int, kCol: Option[Expression],
-              childOutput: Seq[Attribute]): InternalRow => Int = kCol match {
-    case None => _ => k
-    case Some(e) =>
-      val b = BindReferences.bindReference(e, childOutput)
-      row => {
-        val v = b.eval(row)
-        if (v == null) 0
-        else math.min(Int.MaxValue.toLong, math.max(0L, v.asInstanceOf[Long])).toInt
-      }
-  }
-
-  /** Bounded-heap prune: consume `rows`, keep ≤ limit(row) best per key —
-    * state is output-sized (≤ k rows per distinct key in the partition),
-    * nothing buffers. `limitOf` is constant for static k and reads the
-    * quota column under the variable-k discipline (the caller's contract:
-    * constant within a key; null/non-positive quota drops the key). Keys
-    * and rows are copied out of the scan's reused buffers.
-    */
-  def prune(rows: Iterator[InternalRow], keyE: Expression, ordE: Expression,
-            tieE: Expression, limitOf: InternalRow => Int): scala.collection.mutable.HashMap[Any, scala.collection.mutable.PriorityQueue[Entry]] = {
-    val (readKey, copyKey) = keyReader(keyE)
-    val m = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.PriorityQueue[Entry]]
-    rows.foreach { row =>
-      val o = ordE.eval(row)
-      val t = tieE.eval(row)
-      val cap = if (o != null && t != null) limitOf(row) else 0
-      if (cap > 0) { // documented: null-ordered / zero-quota rows drop
-        // lookup with the (possibly buffer-reused) read value; COPY only
-        // when inserting a new key — the steady-state rejection path
-        // allocates nothing (rows are likewise copied only on admission)
-        val kv = readKey(row)
-        val e = Entry(o.asInstanceOf[Long], t.asInstanceOf[Long], null)
-        val pq = m.get(kv) match {
-          case Some(q) => q
-          case None =>
-            val q = scala.collection.mutable.PriorityQueue.empty[Entry](worstFirst)
-            m.put(copyKey(kv), q)
-            q
-        }
-        if (pq.size < cap) pq.enqueue(e.copy(row = row.copy()))
-        else if (better(e, pq.head)) { pq.dequeue(); pq.enqueue(e.copy(row = row.copy())) }
-      }
+  def limiter(kCol: Expression, childOutput: Seq[Attribute]): InternalRow => Int = {
+    val b = BindReferences.bindReference(kCol, childOutput)
+    row => {
+      val v = b.eval(row)
+      if (v == null) 0
+      else math.min(Int.MaxValue.toLong, math.max(0L, v.asInstanceOf[Long])).toInt
     }
-    m
   }
 
   /** Streaming group-limit over (key, order DESC, tie)-SORTED input:
-    * emit `f(row, rankWithinKey)` for the first k non-null-ordered rows
-    * of each key run. Zero per-row allocation beyond the held key copy
-    * at group boundaries — the partial's inner loop under the sorted
-    * discipline.
+    * emit `f(row, rankWithinKey)` for the first limit(row) non-null-ordered
+    * rows of each key run. Zero per-row allocation beyond the held key
+    * copy at group boundaries (a UTF8String key is copied because scan
+    * buffers are reused).
     */
   def groupLimit[T](rows: Iterator[InternalRow], keyE: Expression, ordE: Expression,
                     tieE: Expression, limitOf: InternalRow => Int)(f: (InternalRow, Int) => T): Iterator[T] =
     new Iterator[T] {
-      private val (readKey, copyKey) = keyReader(keyE)
       private var curKey: Any = null
       private var haveKey = false
       private var taken = 0
@@ -468,10 +289,13 @@ private[plans] object TopKPrune {
         while (ready == null && rows.hasNext) {
           val row = rows.next()
           if (ordE.eval(row) != null && tieE.eval(row) != null) {
-            val kv = readKey(row)
+            val kv = keyE.eval(row)
             val same = haveKey && java.util.Objects.equals(curKey, kv)
             if (!same) {
-              curKey = copyKey(kv) // held across next() calls
+              curKey = kv match { // held across next() calls
+                case s: UTF8String => s.copy()
+                case other => other
+              }
               haveKey = true
               taken = 0
             }
@@ -488,21 +312,17 @@ private[plans] object TopKPrune {
     }
 }
 
-/** Phase 1: partition-local top-k per key — the map-side combine
-  * row_number() cannot have. No distribution requirement; emits the
-  * retained rows unchanged (rank is assigned after the exchange).
-  * `sorted = true` asks EnsureRequirements for the (key, order DESC,
-  * tie) child sort and streams a group-limit; `sorted = false` runs the
-  * buffer-free bounded heap. See [[TopKPerKey]] for the profile trade.
+/** Phase 1: partition-local top-k per key over the sorted child. No
+  * distribution requirement; emits the retained rows unchanged (rank is
+  * assigned after the exchange).
   */
 case class TopKPerKeyPartialExec(
-    key: Expression, order: Expression, tie: Expression, k: Int,
-    child: SparkPlan, sorted: Boolean = false,
-    kCol: Option[Expression] = None) extends UnaryExecNode {
+    key: Expression, order: Expression, tie: Expression, kCol: Expression,
+    child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
   override def outputPartitioning = child.outputPartitioning
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (sorted) Seq(TopKPrune.requiredOrdering(key, order, tie)) else Seq(Nil)
+    Seq(TopKPrune.requiredOrdering(key, order, tie))
   override lazy val metrics = Map("numOutputRows" ->
     org.apache.spark.sql.execution.metric.SQLMetrics
       .createMetric(sparkContext, "number of output rows"))
@@ -510,37 +330,29 @@ case class TopKPerKeyPartialExec(
     val (keyB, ordB, tieB) = (BindReferences.bindReference(key, child.output),
       BindReferences.bindReference(order, child.output),
       BindReferences.bindReference(tie, child.output))
-    val limitOf = TopKPrune.limiter(k, kCol, child.output)
-    val useSorted = sorted
+    val limitOf = TopKPrune.limiter(kCol, child.output)
     val numOut = longMetric("numOutputRows")
     child.execute().mapPartitions({ it =>
-      if (useSorted)
-        TopKPrune.groupLimit(it, keyB, ordB, tieB, limitOf) { (row, _) => numOut += 1; row }
-      else
-        TopKPrune.prune(it, keyB, ordB, tieB, limitOf)
-          .valuesIterator.flatMap(_.iterator.map { e => numOut += 1; e.row })
+      TopKPrune.groupLimit(it, keyB, ordB, tieB, limitOf) { (row, _) => numOut += 1; row }
     }, preservesPartitioning = true)
   }
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyPartialExec =
     copy(child = newChild)
 }
 
-/** Phase 2: requires clustering on the key (Spark inserts the exchange),
-  * re-prunes the ≤ k·P survivors per key, and emits rows best-first with
-  * the 1-based rank column appended. Under the sorted discipline the
-  * post-exchange sort is over ≤ k·P rows per key — survivor-sized, and
-  * the rank IS the group-limit counter.
+/** Phase 2: requires clustering on the key (Spark inserts the exchange)
+  * and the same sort over the ≤ k·P survivors per key, then emits rows
+  * best-first with the 1-based rank column appended — the rank IS the
+  * group-limit counter.
   */
 case class TopKPerKeyFinalExec(
-    key: Expression, order: Expression, tie: Expression, k: Int,
-    rankAttr: AttributeReference, child: SparkPlan,
-    sorted: Boolean = false,
-    kCol: Option[Expression] = None) extends UnaryExecNode {
+    key: Expression, order: Expression, tie: Expression, kCol: Expression,
+    rankAttr: AttributeReference, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output :+ rankAttr
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(key)) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    if (sorted) Seq(TopKPrune.requiredOrdering(key, order, tie)) else Seq(Nil)
+    Seq(TopKPrune.requiredOrdering(key, order, tie))
   override lazy val metrics = Map("numOutputRows" ->
     org.apache.spark.sql.execution.metric.SQLMetrics
       .createMetric(sparkContext, "number of output rows"))
@@ -548,31 +360,17 @@ case class TopKPerKeyFinalExec(
     val (keyB, ordB, tieB) = (BindReferences.bindReference(key, child.output),
       BindReferences.bindReference(order, child.output),
       BindReferences.bindReference(tie, child.output))
-    val limitOf = TopKPrune.limiter(k, kCol, child.output)
-    val useSorted = sorted
+    val limitOf = TopKPrune.limiter(kCol, child.output)
     val outAttrs = output
     val numOut = longMetric("numOutputRows")
     child.execute().mapPartitions { it =>
       val proj = UnsafeProjection.create(outAttrs, outAttrs)
       val joined = new JoinedRow
       val rankRow = new GenericInternalRow(1)
-      if (useSorted)
-        TopKPrune.groupLimit(it, keyB, ordB, tieB, limitOf) { (row, rank) =>
-          rankRow.update(0, rank)
-          numOut += 1
-          proj(joined(row, rankRow)).copy()
-        }
-      else {
-        val m = TopKPrune.prune(it, keyB, ordB, tieB, limitOf)
-        m.valuesIterator.flatMap { pq =>
-          // dequeue order is worst-first; reverse for best-first ranks
-          val best = pq.dequeueAll.reverseIterator.toSeq
-          best.iterator.zipWithIndex.map { case (e, i) =>
-            rankRow.update(0, i + 1)
-            numOut += 1
-            proj(joined(e.row, rankRow)).copy()
-          }
-        }
+      TopKPrune.groupLimit(it, keyB, ordB, tieB, limitOf) { (row, rank) =>
+        rankRow.update(0, rank)
+        numOut += 1
+        proj(joined(row, rankRow)).copy()
       }
     }
   }

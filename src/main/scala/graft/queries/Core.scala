@@ -187,7 +187,7 @@ object Core {
       org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
       org.apache.spark.sql.types.StructField("o_orderdate", org.apache.spark.sql.types.DateType),
       org.apache.spark.sql.types.StructField("o_orderpriority", org.apache.spark.sql.types.StringType)))
-    graft.sources.Ingest.csv(spark, out, schema, dropMalformed = true)
+    graft.sources.Ingest.csv(spark, out, schema)
       .orderBy("o_orderkey")
   }
 
@@ -215,7 +215,7 @@ object Core {
       org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
-    graft.sources.Ingest.jsonl(spark, out, schema, dropMalformed = true)
+    graft.sources.Ingest.jsonl(spark, out, schema)
       .orderBy("doc_id")
   }
 

@@ -212,7 +212,7 @@ object Ext {
     "x158_capped_neardup"  -> ((s: SparkSession, d: String) => Dedup.cappedNeardupPairs(s, d)),
     "x269_routed_neardup"  -> ((s: SparkSession, d: String) => Dedup.routedNearDup(s, d)),
     "x270_hll_rollup"      -> ((s: SparkSession, d: String) => graft.ops.Quality.hllRollup(s, d)),
-    "x271_topk_fact"       -> ((s: SparkSession, d: String) => graft.plans.TopKPerKey.topFactPerPart(s, d)),
+    "x271_topk_fact"       -> ((s: SparkSession, d: String) => graft.plans.TopKPerKey.topFactPerPartWindow(s, d)),
     "x272_topk_fact_window" -> ((s: SparkSession, d: String) => graft.plans.TopKPerKey.topFactPerPartWindow(s, d)),
     "x273_ddsketch"        -> ((s: SparkSession, d: String) => graft.ops.Quality.ddsketchQuantiles(s, d)),
     "x274_stratified_aes"  -> ((s: SparkSession, d: String) => graft.ops.Sampling.stratifiedAes(s, d)),

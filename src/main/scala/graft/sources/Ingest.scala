@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.StructType
   * read the reference did use (F.py:28, S4).
   *
   * Production posture: schema is REQUIRED (no inference job over 100 TB),
-  * and malformed handling is an explicit choice per source.
+  * and malformed rows are dropped.
   *
   * DROPMALFORMED caveat: Spark judges malformedness only over the columns
   * a query actually parses — under CSV column pruning a bare count()
@@ -24,12 +24,11 @@ import org.apache.spark.sql.types.StructType
   */
 object Ingest {
 
-  def csv(spark: SparkSession, path: String, schema: StructType,
-          dropMalformed: Boolean = true): DataFrame =
+  def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
       .schema(schema)
       .option("header", "true")
-      .option("mode", if (dropMalformed) "DROPMALFORMED" else "PERMISSIVE")
+      .option("mode", "DROPMALFORMED")
       .csv(path)
 
   /** Parquet is the engine's native format: schema travels with the file,
@@ -40,13 +39,12 @@ object Ingest {
 
   /** JSON-lines with an explicit schema — the interchange format training
     * corpora actually ship in. Same posture as [[csv]]: no inference job,
-    * malformed lines dropped only by explicit choice.
+    * malformed lines dropped.
     */
-  def jsonl(spark: SparkSession, path: String, schema: StructType,
-            dropMalformed: Boolean = true): DataFrame =
+  def jsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
       .schema(schema)
-      .option("mode", if (dropMalformed) "DROPMALFORMED" else "PERMISSIVE")
+      .option("mode", "DROPMALFORMED")
       .json(path)
 
   /** ORC — the other columnar warehouse format Spark ships natively. Like

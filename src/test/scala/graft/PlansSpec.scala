@@ -1,39 +1,40 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 
-import graft.plans.TopKPerKey
+import graft.plans.{TopKPerKey, TopKPerKeyPartialExec}
 
-/** The custom logical-node → strategy → two-phase-exec operator. */
+/** Per-key top-k plan laws: Spark 4's WindowGroupLimit on the literal-k
+  * window idiom, and the variable-k logical-node → strategy →
+  * two-phase-exec operator.
+  */
 class PlansSpec extends SparkSuite {
 
-  test("TopKPerKey equals the window idiom on real data and plans partial below the exchange") {
-    import org.apache.spark.sql.expressions.Window
-    val rev = Tables.lineitem(spark, sf)
-      .select(col("l_partkey"),
-        round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
-      .join(broadcast(Tables.part(spark, sf).select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
-      .groupBy("p_brand", "l_partkey")
-      .agg(sum(col("cents")).as("rev_e2"))
-    val got = TopKPerKey.of(rev, "p_brand", "rev_e2", "l_partkey", 3, "rnk")
-    val exp = rev.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("p_brand"))
-          .orderBy(col("rev_e2").desc, col("l_partkey"))))
-      .filter(col("rnk") <= 3)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    assert(got.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet === exp.toSet,
-      "custom operator diverges from the window idiom")
-    // physical shape: partial prune BEFORE the exchange, final after —
-    // the map-side combine row_number() cannot have
+  /** numOutputRows of every map-side top-k prune in an executed plan —
+    * Partial-mode WindowGroupLimitExec and TopKPerKeyPartialExec alike.
+    */
+  private def partialPruneRows(df: DataFrame): Seq[Long] =
+    flattenPlan(df.queryExecution.executedPlan).collect {
+      case w: WindowGroupLimitExec if w.mode == Partial => w.metrics("numOutputRows").value
+      case t: TopKPerKeyPartialExec => t.metrics("numOutputRows").value
+    }
+
+  test("x261 plans WindowGroupLimit Partial below the exchange and Final above it") {
+    val got = TopKPerKey.topBrandParts(spark, sf)
+    assert(got.collect().nonEmpty)
+    // the tree prints top-down: Final, then the hash exchange, then
+    // the map-side Partial prune
     val plan = got.queryExecution.executedPlan.toString
-    val iPartial = plan.indexOf("TopKPerKeyPartial")
-    val iFinal = plan.indexOf("TopKPerKeyFinal")
-    val iExchange = plan.indexOf("Exchange hashpartitioning")
-    assert(iPartial >= 0 && iFinal >= 0 && iExchange >= 0, s"operators missing:\n$plan")
+    val lines = plan.linesIterator.toIndexedSeq
+    def limitAt(mode: String): Int =
+      lines.indexWhere(l => l.contains("WindowGroupLimit") && l.trim.endsWith(mode))
+    val (iFinal, iPartial) = (limitAt("Final"), limitAt("Partial"))
+    val iExchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    assert(iFinal >= 0 && iExchange >= 0 && iPartial >= 0, s"operators missing:\n$plan")
     assert(iFinal < iExchange && iExchange < iPartial,
-      "expected final above the hash exchange above partial (tree prints top-down)")
+      s"expected Final above the hash exchange above Partial:\n$plan")
   }
 
   test("TopKPerKey semantics: ties break ascending, short groups emit whole, null order drops") {
@@ -42,9 +43,9 @@ class PlansSpec extends SparkSuite {
       ("a", 10L, 1L), ("a", 10L, 2L), ("a", 10L, 3L), ("a", 10L, 4L), // 4-way tie
       ("b", 5L, 9L), ("b", 7L, 8L),                                   // short group
       ("c", null, 1L), ("c", 3L, 2L),                                 // null order drops
-    ).toDF("k", "v", "t")
-    val got = TopKPerKey.of(df, "k", "v", "t", 3, "rnk")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+    ).toDF("k", "v", "t").withColumn("quota", lit(3L))
+    val got = TopKPerKey.ofVarK(df, "k", "v", "t", "quota", "rnk")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(4)))
       .sortBy(r => (r._1, r._4))
     assert(got.toSeq === Seq(
       ("a", 10L, 1L, 1), ("a", 10L, 2L, 2), ("a", 10L, 3L, 3), // tie → t asc, cut at k
@@ -52,10 +53,7 @@ class PlansSpec extends SparkSuite {
       ("c", 3L, 2L, 1)))
   }
 
-  test("variable-k TopKPerKey: per-key quotas honored, exchange quota-bounded, both disciplines agree") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  test("variable-k TopKPerKey: per-key quotas honored, exchange quota-bounded") {
     // three keys with quotas 1/3/0 over 8 fact-sized input partitions: a
     // zero quota drops its key entirely, and the partial may ship at
     // most quota rows per (key, partition) = (1+3+0)*8 = 32 — the
@@ -65,136 +63,73 @@ class PlansSpec extends SparkSuite {
       .select((col("id") % 3).cast("string").as("k"), col("id").as("v"), col("id").as("t"),
         when(col("id") % 3 === 0, 1L).when(col("id") % 3 === 1, 3L)
           .otherwise(0L).as("quota"))
-    def run(sorted: Boolean) = {
-      val got = graft.plans.TopKPerKey.ofVarK(df.toDF(), "k", "v", "t", "quota",
-        "rnk", sortPartial = sorted)
-      val rows = got.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(4))).toSet
-      (got, rows)
-    }
-    val (gotS, rowsS) = run(sorted = true)
-    val (_, rowsH) = run(sorted = false)
-    assert(rowsS === rowsH, "variable-k disciplines diverged")
+    val got = TopKPerKey.ofVarK(df, "k", "v", "t", "quota", "rnk")
+    val rows = got.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(4))).toSet
     // quota semantics: key 0 keeps its single best, key 1 its top 3,
     // key 2 nothing (ids 0..8999; key j's members are ids ≡ j mod 3)
-    assert(rowsS === Set(("0", 8997L, 1),
+    assert(rows === Set(("0", 8997L, 1),
       ("1", 8998L, 1), ("1", 8995L, 2), ("1", 8992L, 3)))
-    def findPartials(p: SparkPlan): Seq[graft.plans.TopKPerKeyPartialExec] = p match {
-      case a: AdaptiveSparkPlanExec => findPartials(a.executedPlan)
-      case s: QueryStageExec => findPartials(s.plan)
-      case t: graft.plans.TopKPerKeyPartialExec => t +: t.children.flatMap(findPartials)
-      case other => other.children.flatMap(findPartials)
-    }
-    val partials = findPartials(gotS.queryExecution.executedPlan)
+    val partials = partialPruneRows(got)
     assert(partials.nonEmpty, "variable-k did not plan through TopKPerKeyPartialExec")
-    partials.flatMap(_.metrics.get("numOutputRows")).foreach(m =>
-      assert(m.value <= 32L, s"variable-k partial leaked ${m.value} rows past the quota bound"))
+    partials.foreach(n =>
+      assert(n <= 32L, s"variable-k partial leaked $n rows past the quota bound"))
   }
 
-  test("struct/binary keys: quotas hold per composite key, both disciplines match the window idiom, map keys refuse") {
-    import org.apache.spark.sql.expressions.Window
-    // 15 composite (k1, k2) groups interleaved across 8 partitions so the
-    // run-boundary compare sees alternating groups — a codec that held a
-    // mutating buffer would merge them (one quota for the partition)
-    val df = spark.range(0, 6000, 1, 8)
+  test("ofVarK refuses struct and binary keys at plan time") {
+    val df = spark.range(0, 100, 1, 2)
       .select((col("id") % 5).cast("string").as("k1"), (col("id") % 3).as("k2"),
-        col("id").as("v"), col("id").as("t"))
-      .withColumn("kk", struct(col("k1"), col("k2")))
-    def run(sorted: Boolean) =
-      TopKPerKey.of(df, "kk", "v", "t", 2, "rnk", sortPartial = sorted)
-        .select("k1", "k2", "v", "rnk").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    val s = run(sorted = true)
-    assert(s === run(sorted = false), "struct-key disciplines diverged")
-    val w = Window.partitionBy("k1", "k2").orderBy(col("v").desc, col("t"))
-    val exp = df.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 2)
-      .select("k1", "k2", "v", "rnk").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    assert(s === exp, "struct-key operator diverged from the window idiom")
-    // binary key (Array[Byte] has identity equals — the codec must group
-    // by content): top-1 per k1 via its utf8 bytes = top-1 per k1
-    val gotB = TopKPerKey.of(df.withColumn("kb", col("k1").cast("binary")),
-        "kb", "v", "t", 1, "rnk")
-      .select("k1", "v").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val expB = df.withColumn("r", row_number().over(
-        Window.partitionBy("k1").orderBy(col("v").desc, col("t"))))
-      .filter(col("r") === 1)
-      .select("k1", "v").collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(gotB === expB, "binary key grouped by identity, not content")
-    // maps have no canonical byte order: refused at plan time, nested too
+        col("id").as("v"), col("id").as("t"), lit(2L).as("quota"))
     intercept[IllegalArgumentException] {
-      TopKPerKey.of(df.withColumn("km", map(col("k1"), col("k2"))), "km", "v", "t", 1)
+      TopKPerKey.ofVarK(df.withColumn("kk", struct(col("k1"), col("k2"))),
+        "kk", "v", "t", "quota")
     }
     intercept[IllegalArgumentException] {
-      TopKPerKey.of(df.withColumn("km2", struct(map(col("k1"), col("k2")).as("m"))),
-        "km2", "v", "t", 1)
+      TopKPerKey.ofVarK(df.withColumn("kb", col("k1").cast("binary")), "kb", "v", "t", "quota")
     }
   }
 
-  test("TopKPerKey partial phase ships at most k rows per key per input partition") {
-    import spark.implicits._
-    // one hot key spread over 8 partitions, 1000 rows each: the window
-    // idiom would shuffle all 8000 rows; the partial phase must cut the
-    // exchange input to <= k rows per (key, partition)
+  test("window group limit partial phase ships at most k rows per key per input partition") {
+    import org.apache.spark.sql.expressions.Window
+    // two hot keys spread over 8 partitions, 1000 rows each: without the
+    // map-side prune all 8000 rows would cross the exchange; the Partial
+    // WindowGroupLimit must cut it to <= k rows per (key, partition). The
+    // key is not a literal — a constant key folds to TakeOrderedAndProject
     val df = spark.range(0, 8000, 1, 8)
-      .select(lit("hot").as("k"), col("id").as("v"), col("id").as("t"))
-    val got = TopKPerKey.of(df, "k", "v", "t", 5, "rnk")
-    val rows = got.collect().map(r => (r.getLong(1), r.getInt(3)))
-    assert(rows.sortBy(_._2).map(_._1).toSeq === Seq(7999L, 7998L, 7997L, 7996L, 7995L))
-    // read the partial phase's output-row metric: the shuffle received
-    // <= k * 8 rows, not 8000. AQE folds exchanges into QueryStage
-    // leaves, so the walk must cross both wrappers.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def findPartials(p: SparkPlan): Seq[graft.plans.TopKPerKeyPartialExec] = p match {
-      case a: AdaptiveSparkPlanExec => findPartials(a.executedPlan)
-      case s: QueryStageExec => findPartials(s.plan)
-      case t: graft.plans.TopKPerKeyPartialExec => t +: t.children.flatMap(findPartials)
-      case other => other.children.flatMap(findPartials)
-    }
-    val partials = findPartials(got.queryExecution.executedPlan)
-    assert(partials.nonEmpty, "no TopKPerKeyPartialExec in the executed plan")
-    // partial emits <= 5 * 8 = 40; the window idiom would emit 8000
-    partials.flatMap(_.metrics.get("numOutputRows")).foreach(m =>
-      assert(m.value <= 40L, s"partial prune leaked ${m.value} rows through the exchange"))
+      .select((col("id") % 2).cast("string").as("k"), col("id").as("v"), col("id").as("t"))
+    val got = df.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("k")).orderBy(col("v").desc, col("t"))))
+      .filter(col("rnk") <= 5)
+    val rows = got.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(3)))
+    assert(rows.filter(_._1 == "0").sortBy(_._3).map(_._2).toSeq ===
+      Seq(7998L, 7996L, 7994L, 7992L, 7990L))
+    assert(rows.filter(_._1 == "1").sortBy(_._3).map(_._2).toSeq ===
+      Seq(7999L, 7997L, 7995L, 7993L, 7991L))
+    val partials = partialPruneRows(got)
+    assert(partials.nonEmpty, "no Partial WindowGroupLimitExec in the executed plan")
+    // <= 2 keys * 5 * 8 partitions = 80 rows; without the prune, 8000
+    partials.foreach(n =>
+      assert(n <= 80L, s"partial prune leaked $n rows through the exchange"))
   }
 
   test("stratified A-ES ships a quota-bounded exchange regardless of corpus size") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val got = graft.ops.Sampling.stratifiedAes(spark, sf)
-    val n = got.count()
-    assert(n > 0)
-    def findPartials(p: SparkPlan): Seq[graft.plans.TopKPerKeyPartialExec] = p match {
-      case a: AdaptiveSparkPlanExec => findPartials(a.executedPlan)
-      case s: QueryStageExec => findPartials(s.plan)
-      case t: graft.plans.TopKPerKeyPartialExec => t +: t.children.flatMap(findPartials)
-      case other => other.children.flatMap(findPartials)
-    }
-    val partials = findPartials(got.queryExecution.executedPlan)
-    assert(partials.nonEmpty, "A-ES did not plan through TopKPerKeyPartialExec")
+    assert(got.collect().nonEmpty)
+    val partials = partialPruneRows(got)
+    assert(partials.nonEmpty, "A-ES did not plan a Partial WindowGroupLimit")
     val sources = graft.Tables.documents(spark, sf)
       .select("source").distinct().count()
     // P = the ACTUAL scan partition count of the documents table (file
     // layout / maxPartitionBytes decide this, and it can exceed
     // defaultParallelism on a many-file or large-file layout — the bound
-    // must come from the same partitioning the partial exec ran over,
+    // must come from the same partitioning the partial prune ran over,
     // not from the cluster's core count)
     val parts = graft.Tables.documents(spark, sf).rdd.getNumPartitions.toLong
     // the k·P bound: <= k per (source, input partition) — the exchange is
     // quota-sized at ANY corpus size (measured constant 801 rows at
     // 1×/10×/30× in SCALE.md round-10)
-    partials.flatMap(_.metrics.get("numOutputRows")).foreach(m =>
-      assert(m.value <= 10L * sources * (parts + 4),
-        s"A-ES partial shipped ${m.value} rows past the quota bound"))
-  }
-
-  test("fact-grain measured pair: operator and window idiom agree row for row") {
-    val a = graft.plans.TopKPerKey.topFactPerPart(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
-    val b = graft.plans.TopKPerKey.topFactPerPartWindow(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSeq
-    assert(a === b, "x271/x272 diverged — the SCALE comparison would be apples to oranges")
-    assert(a.nonEmpty)
+    partials.foreach(m =>
+      assert(m <= 10L * sources * (parts + 4),
+        s"A-ES partial shipped $m rows past the quota bound"))
   }
 
   // ---- plan-contract sweep (r11 verdict directive 7) -------------------

@@ -2,11 +2,12 @@
 """Local replica of the driver's t2 correctness gate (dev tool only, not
 part of the library): run each oracle SQL from Verify's oracle_sql.json in
 DuckDB over the sf parquet tables, load the corresponding Spark result
-parquet, sort columns by name, and compare values exactly.
+parquet, sort columns by name, and compare values exactly. Every query
+Verify lists in failures.json (it threw) also counts as a failure.
 
 Usage: python3 tools/check.py [sfDir] [verifyOutDir] [only_query...]
 """
-import sys, json, math
+import sys, os, json, math
 import duckdb
 import pandas as pd
 import numpy as np
@@ -39,8 +40,15 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f'{out}/oracle_sql.json'))
     n_ok = n_fail = 0
+    threw = {}
+    if os.path.exists(f'{out}/failures.json'):
+        threw = json.load(open(f'{out}/failures.json'))
+    for name in sorted(threw):
+        if not only or name in only:
+            print(f'FAIL {name}: query threw: {threw[name]}')
+            n_fail += 1
     for name in sorted(oracle):
-        if only and name not in only:
+        if (only and name not in only) or name in threw:
             continue
         try:
             exp = canon(con.execute(oracle[name]).df())
