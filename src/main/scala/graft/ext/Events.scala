@@ -188,7 +188,7 @@ object Events {
           .as("n_hits"),
         sum(when(col("dst") === col("baseline_pred"), col("n_te")).otherwise(0L))
           .as("n_baseline_hits"),
-        first(col("predicted")).as("predicted"),
+        max(col("predicted")).as("predicted"), // constant per src after the join
         sum(col("n_tr")).as("n_train"))
       .filter(col("n_test") > 0L)
       .select(col("src"), col("predicted"), col("n_train"), col("n_test"),

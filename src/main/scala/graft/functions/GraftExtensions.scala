@@ -7,13 +7,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-/** Build-time session integration — rung (c) of the custom-operator
-  * ladder, the `SparkSessionExtensions` surface: with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` every session
-  * built from the config exposes the six native expressions as SQL
-  * functions (no per-session [[functions.registerSql]] call) and runs the
-  * [[HammingIdentityFold]] optimizer rule. Function injection targets the
-  * session-build path a platform team controls; the live-session
+/** Build-time session integration, the `SparkSessionExtensions` surface:
+  * with `spark.sql.extensions=graft.functions.GraftExtensions` every
+  * session built from the config exposes the six native expressions as
+  * SQL functions (no per-session [[functions.registerSql]] call) and runs
+  * the [[HammingIdentityFold]] optimizer rule. Function injection targets
+  * the session-build path a platform team controls; the live-session
   * `registerSql` stays for notebook-style opt-in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -35,10 +34,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     fn("int8_dot", 2)(es => Int8Dot(es(0), es(1)))
     fn("deflate_ratio", 1)(es => DeflateRatio(es.head))
     ext.injectOptimizerRule(_ => HammingIdentityFold)
-    // rung (c) in full: the variable-k per-key top-k operator's strategy,
-    // active for any session built with this extension (the live-session
-    // path self-registers via TopKPerKey.ofVarK)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
   }
 }
 

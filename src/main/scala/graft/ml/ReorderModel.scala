@@ -769,7 +769,8 @@ object ReorderModel {
       // the decile's LAST row's inclusive cumpos IS the cumulative
       // positives through the decile — no second window over the fact
       .agg(count(lit(1)).as("n_rows"), max(col("cumpos")).as("cum_pos"),
-        first(col("n_total")).as("n_total"), first(col("pos_total")).as("pos_total"))
+        // the totals are constant per decile: max reads them order-free
+        max(col("n_total")).as("n_total"), max(col("pos_total")).as("pos_total"))
     val w = Window.orderBy(col("decile"))
       .rowsBetween(Window.unboundedPreceding, -1) // 10-row frame: metadata
     dec.withColumn("n_pos", col("cum_pos") - coalesce(max(col("cum_pos")).over(w), lit(0L)))

@@ -2695,7 +2695,7 @@ object Analytics {
           - d38(col("s")) * d38(col("s")))).as("den"))
     val one = lagged.groupBy("n", "den")
       .pivot("lag", (1 to 7).map(_.toString))
-      .agg(first(col("num_k")))
+      .agg(max(col("num_k"))) // one num_k per pivot cell
     def rho(k: Int): Column = d(col(k.toString)) / d(col("den"))
     def term(k: Int): Column = rho(k) * rho(k) / d(col("n") - k)
     val qLb = d(col("n")) * d(col("n") + 2L) *

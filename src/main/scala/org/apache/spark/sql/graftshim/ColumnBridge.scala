@@ -22,15 +22,6 @@ object ColumnBridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
-  /** Plan → DataFrame (Dataset.ofRows is private[sql]) — the entry a
-    * custom logical operator needs to surface as a normal DataFrame.
-    */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** Release the storage blocks behind a `localCheckpoint()`ed frame.
     * `Dataset.unpersist` only talks to the CacheManager (plan-keyed
     * cache entries); a local checkpoint's MEMORY_AND_DISK blocks belong

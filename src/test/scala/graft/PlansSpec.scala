@@ -4,88 +4,65 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.window.{Partial, WindowGroupLimitExec}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{TopKPerKey, TopKPerKeyPartialExec}
+import graft.plans.TopKPerKey
 
-/** Per-key top-k plan laws: Spark 4's WindowGroupLimit on the literal-k
-  * window idiom, and the variable-k logical-node → strategy →
-  * two-phase-exec operator.
+/** Per-key top-k plan laws: Spark 4's WindowGroupLimit on the window
+  * idiom, with a literal rank filter or a column quota under a literal
+  * ceiling.
   */
 class PlansSpec extends SparkSuite {
 
-  /** numOutputRows of every map-side top-k prune in an executed plan —
-    * Partial-mode WindowGroupLimitExec and TopKPerKeyPartialExec alike.
+  /** numOutputRows of every map-side top-k prune (Partial-mode
+    * WindowGroupLimitExec) in an executed plan.
     */
   private def partialPruneRows(df: DataFrame): Seq[Long] =
     flattenPlan(df.queryExecution.executedPlan).collect {
       case w: WindowGroupLimitExec if w.mode == Partial => w.metrics("numOutputRows").value
-      case t: TopKPerKeyPartialExec => t.metrics("numOutputRows").value
     }
 
   test("x261 plans WindowGroupLimit Partial below the exchange and Final above it") {
-    val got = TopKPerKey.topBrandParts(spark, sf)
-    assert(got.collect().nonEmpty)
-    // the tree prints top-down: Final, then the hash exchange, then
-    // the map-side Partial prune
-    val plan = got.queryExecution.executedPlan.toString
-    val lines = plan.linesIterator.toIndexedSeq
-    def limitAt(mode: String): Int =
-      lines.indexWhere(l => l.contains("WindowGroupLimit") && l.trim.endsWith(mode))
-    val (iFinal, iPartial) = (limitAt("Final"), limitAt("Partial"))
-    val iExchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
-    assert(iFinal >= 0 && iExchange >= 0 && iPartial >= 0, s"operators missing:\n$plan")
-    assert(iFinal < iExchange && iExchange < iPartial,
-      s"expected Final above the hash exchange above Partial:\n$plan")
-  }
-
-  test("TopKPerKey semantics: ties break ascending, short groups emit whole, null order drops") {
-    import spark.implicits._
-    val df = Seq[(String, java.lang.Long, Long)](
-      ("a", 10L, 1L), ("a", 10L, 2L), ("a", 10L, 3L), ("a", 10L, 4L), // 4-way tie
-      ("b", 5L, 9L), ("b", 7L, 8L),                                   // short group
-      ("c", null, 1L), ("c", 3L, 2L),                                 // null order drops
-    ).toDF("k", "v", "t").withColumn("quota", lit(3L))
-    val got = TopKPerKey.ofVarK(df, "k", "v", "t", "quota", "rnk")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getInt(4)))
-      .sortBy(r => (r._1, r._4))
-    assert(got.toSeq === Seq(
-      ("a", 10L, 1L, 1), ("a", 10L, 2L, 2), ("a", 10L, 3L, 3), // tie → t asc, cut at k
-      ("b", 7L, 8L, 1), ("b", 5L, 9L, 2),
-      ("c", 3L, 2L, 1)))
+    // x279's column quota under the literal ceiling 3 plans the same shape
+    for (got <- Seq(TopKPerKey.topBrandParts(spark, sf),
+                    TopKPerKey.topBrandPartsTiered(spark, sf))) {
+      assert(got.collect().nonEmpty)
+      // the tree prints top-down: Final, then the hash exchange, then
+      // the map-side Partial prune
+      val plan = got.queryExecution.executedPlan.toString
+      val lines = plan.linesIterator.toIndexedSeq
+      def limitAt(mode: String): Int =
+        lines.indexWhere(l => l.contains("WindowGroupLimit") && l.trim.endsWith(mode))
+      val (iFinal, iPartial) = (limitAt("Final"), limitAt("Partial"))
+      val iExchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+      assert(iFinal >= 0 && iExchange >= 0 && iPartial >= 0, s"operators missing:\n$plan")
+      assert(iFinal < iExchange && iExchange < iPartial,
+        s"expected Final above the hash exchange above Partial:\n$plan")
+    }
   }
 
   test("variable-k TopKPerKey: per-key quotas honored, exchange quota-bounded") {
+    import org.apache.spark.sql.expressions.Window
     // three keys with quotas 1/3/0 over 8 fact-sized input partitions: a
-    // zero quota drops its key entirely, and the partial may ship at
-    // most quota rows per (key, partition) = (1+3+0)*8 = 32 — the
-    // window idiom has NO literal rank filter here, so
-    // InferWindowGroupLimit cannot save it (it would ship all 9000)
+    // zero quota drops its key entirely. x279's idiom: the column quota
+    // alone is no literal rank filter, so InferWindowGroupLimit needs the
+    // literal ceiling 3 (>= every quota, so it drops no row) to plan the
+    // Partial prune, which ships <= 3 keys * 3 * 8 partitions = 72 rows
+    // (without it, all 9000)
     val df = spark.range(0, 9000, 1, 8)
       .select((col("id") % 3).cast("string").as("k"), col("id").as("v"), col("id").as("t"),
         when(col("id") % 3 === 0, 1L).when(col("id") % 3 === 1, 3L)
           .otherwise(0L).as("quota"))
-    val got = TopKPerKey.ofVarK(df, "k", "v", "t", "quota", "rnk")
+    val got = df.withColumn("rnk", row_number().over(
+        Window.partitionBy(col("k")).orderBy(col("v").desc, col("t"))))
+      .filter(col("rnk") <= col("quota") && col("rnk") <= 3)
     val rows = got.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(4))).toSet
     // quota semantics: key 0 keeps its single best, key 1 its top 3,
     // key 2 nothing (ids 0..8999; key j's members are ids ≡ j mod 3)
     assert(rows === Set(("0", 8997L, 1),
       ("1", 8998L, 1), ("1", 8995L, 2), ("1", 8992L, 3)))
     val partials = partialPruneRows(got)
-    assert(partials.nonEmpty, "variable-k did not plan through TopKPerKeyPartialExec")
+    assert(partials.nonEmpty, "column quota + literal ceiling planned no Partial WindowGroupLimit")
     partials.foreach(n =>
-      assert(n <= 32L, s"variable-k partial leaked $n rows past the quota bound"))
-  }
-
-  test("ofVarK refuses struct and binary keys at plan time") {
-    val df = spark.range(0, 100, 1, 2)
-      .select((col("id") % 5).cast("string").as("k1"), (col("id") % 3).as("k2"),
-        col("id").as("v"), col("id").as("t"), lit(2L).as("quota"))
-    intercept[IllegalArgumentException] {
-      TopKPerKey.ofVarK(df.withColumn("kk", struct(col("k1"), col("k2"))),
-        "kk", "v", "t", "quota")
-    }
-    intercept[IllegalArgumentException] {
-      TopKPerKey.ofVarK(df.withColumn("kb", col("k1").cast("binary")), "kb", "v", "t", "quota")
-    }
+      assert(n <= 72L, s"variable-k partial leaked $n rows past the ceiling bound"))
   }
 
   test("window group limit partial phase ships at most k rows per key per input partition") {
